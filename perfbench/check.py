@@ -1,7 +1,8 @@
 """Order-insensitive comparison of program outputs against DuckDB.
 
-The oracle SQL comes from ``__spark_entry__.oracle_sql()`` and runs over
-the same generated parquet the program read. The canonical form and the
+The expected outputs come from ``prepare.py``: ``__spark_entry__.oracle_sql()``
+run with DuckDB over the same generated parquet the program read. The
+canonical form and the
 comparison follow the repository's correctness gate: columns sorted by
 name, dtypes normalised, rows sorted, exact equality (the engine rounds
 and formats every value that could legitimately differ between engines).
@@ -9,31 +10,7 @@ and formats every value that could legitimately differ between engines).
 
 from __future__ import annotations
 
-import duckdb
 import pandas as pd
-
-class Oracle:
-    """DuckDB over one generated input directory; one connection per run."""
-
-    def __init__(self, data_dir: str, tables: list[str]):
-        self.con = duckdb.connect()
-        self.con.execute("SET enable_progress_bar = false")
-        # The oracle runs while the JVM starts: leave that cores. Its
-        # buffer cache stays in this process, whose memory the benchmark
-        # reports: keep it small.
-        self.con.execute("SET threads = 2")
-        self.con.execute("SET memory_limit = '512MB'")
-        for t in tables:
-            self.con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{data_dir}/{t}.parquet'")
-
-    def query(self, sql: str) -> pd.DataFrame:
-        # a cursor per query: the connection is made on one thread and
-        # queried from another
-        with self.con.cursor() as cur:
-            return cur.execute(sql).fetchdf()
-
-    def close(self) -> None:
-        self.con.close()
 
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:

@@ -14,7 +14,7 @@ from __future__ import annotations
 import statistics
 from collections import defaultdict
 
-from tracing import layer_of, self_times
+from tracing import self_times
 
 UNITS = {
     # end to end
@@ -82,11 +82,30 @@ SPAN_METRICS = [
     ("sinks.write_s", ("sinks.foreach_partition_write", "sinks.docstore_write",
                        "sinks.write_parquet")),
     ("sinks.verify_s", ("sinks.verify_write",)),
-    ("ext.quality_lang_s", ("ext.quality_lang",)),
+    ("ext.quality_lang_s", ("inline.exact_dedup",)),
     ("ext.exact_dedup_s", ("ext.exact_dedup",)),
-    ("ext.decontam_s", ("ext.decontaminate",)),
+    ("ext.decontam_s", ("ext.decontaminate", "inline.decontaminate")),
     ("ext.minhash_s", ("ext.minhash_near_dup_pairs",)),
 ]
+
+
+#: Layer of the inline work a pipeline function does before a layer call
+#: (``inline.<call>`` spans, see ``workloads.traced_layers``): in
+#: ``train_corpus_pipeline`` the quality and language filter feeds
+#: ``exact_dedup`` and the evaluation-set filter feeds ``decontaminate``;
+#: in ``csv_report_pipeline`` the derived columns feed ``dedup_keep_first``.
+#: Other inline work (joins, filters, projections) counts as operators.
+INLINE_LAYER = {
+    "inline.exact_dedup": "ext",
+    "inline.decontaminate": "ext",
+    "inline.dedup_keep_first": "functions",
+}
+
+
+def layer_of(span_name: str) -> str:
+    if span_name.startswith("inline."):
+        return INLINE_LAYER.get(span_name, "operators")
+    return span_name.split(".", 1)[0]
 
 
 def median(xs) -> float:

@@ -2,13 +2,14 @@
 
     python3 perfbench/run.py --workload contrib_upload --seed 1 --seconds 20 --trace 0
 
-Run from the repository root. The run generates its inputs from the seed
-(``gen.py``), computes the expected outputs with DuckDB, starts Spark on
-``local[<cores>]`` through ``session.get_spark``, runs two warm-up jobs
-(together, ``setup_s``), then runs jobs back to back for
-``--seconds``, and at least two (a closed loop with one client; a job
-that has started finishes). Every output is checked; the last line of standard output is
-one JSON object: ``correct``, ``attempted``, ``failed`` and ``metrics``.
+Run from the repository root. A child process generates the inputs from
+the seed and computes the expected outputs with DuckDB (``prepare.py``).
+Then the run starts Spark on ``local[<cores>]`` through
+``session.get_spark``, runs the workload's warm-up jobs (together,
+``setup_s``), then runs jobs back to back for ``--seconds``, and at least
+three (a closed loop with one client; a job that has started finishes).
+Every output is checked; the last line of standard output is one JSON
+object: ``correct``, ``attempted``, ``failed`` and ``metrics``.
 
 ``--trace 0`` reports the end-to-end metrics. ``--trace 1`` runs half the
 time untraced and half traced (spans at every layer boundary, Spark event
@@ -25,33 +26,32 @@ import argparse
 import faulthandler
 import json
 import os
+import pickle
 import shutil
 import signal
+import subprocess
 import sys
 import tempfile
 import threading
 import time
 import traceback
 
-import gen
-from check import Oracle
 from tracing import (JOB_PROPERTY, PHASE_PROPERTY, EventLog, NullTracer, RssSampler,
                      StreamingStats, Tracer, descendants)
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 
-#: Warm-up jobs, part of set-up. The first job of a fresh JVM (class
-#: loading, code generation, JIT, Python worker start-up) costs two to
-#: five steady ones, and the second is still markedly slower than later
-#: ones.
-WARMUP_JOBS = 2
-#: Measured jobs per run at least.
-MIN_JOBS = 2
+#: Measured jobs per run at least: the median of three or more is not
+#: moved by the slower first one.
+MIN_JOBS = 3
 
-#: A run that has not finished by then is killed with its processes and
-#: exits non-zero; the stacks of its threads go to stderr first.
-DEADLINE_S = 170
+#: A run that has not finished ``--seconds`` plus this long after it
+#: started is killed with its processes and exits non-zero; the stacks of
+#: its threads go to stderr first. It covers input generation, set-up,
+#: the last job's overrun, the checks and the shutdown: on a 4-core host
+#: about 50 to 80 s together.
+MARGIN_S = 160
 
 
 
@@ -100,7 +100,11 @@ def spark_conf(scratch: str, event_log: bool) -> dict:
     tmp = os.path.join(scratch, "tmp")
     conf = {
         "spark.local.dir": os.path.join(scratch, "local"),
-        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -Dderby.system.home={tmp}",
+        # initial heap = maximum: left to grow, G1 expanded the heap in
+        # steps that put corpus_prep's peak memory at 2.3 or 3.2 GB from
+        # one run of the same code to the next
+        "spark.driver.extraJavaOptions": (f"-Xms{os.environ['SPARK_GRAFT_DRIVER_MEM']} "
+                                          f"-Djava.io.tmpdir={tmp} -Dderby.system.home={tmp}"),
         "spark.sql.warehouse.dir": os.path.join(scratch, "warehouse"),
         "spark.sql.streaming.forceDeleteTempCheckpointLocation": "true",
     }
@@ -114,18 +118,18 @@ def spark_conf(scratch: str, event_log: bool) -> dict:
     return conf
 
 
-def arm_deadline() -> None:
+def arm_deadline(deadline_s: float) -> None:
     def expire():
         for pid in descendants(os.getpid()):
             try:
                 os.kill(pid, signal.SIGKILL)
             except ProcessLookupError:
                 pass
-        print(f"run exceeded {DEADLINE_S} s; killed", file=sys.stderr, flush=True)
+        print(f"run exceeded {deadline_s:.0f} s; killed", file=sys.stderr, flush=True)
         os._exit(3)
 
-    faulthandler.dump_traceback_later(DEADLINE_S - 5)
-    timer = threading.Timer(DEADLINE_S, expire)
+    faulthandler.dump_traceback_later(deadline_s - 5)
+    timer = threading.Timer(deadline_s, expire)
     timer.daemon = True
     timer.start()
 
@@ -154,61 +158,45 @@ class Run:
         self.data = os.path.join(scratch, "data")
         self.jobs: list[dict] = []  # {"s", "phase", "errors", "counts"}
         self.start_s = self.warmup_s = 0.0
-        self.final_errors: list[str] = []
+        self.warmup_jobs_s: list[float] = []  # each warm-up job's time
 
     def ctx(self, spark):
         return self.make_ctx(spark=spark, data=self.data, work=os.path.join(self.scratch, "work"),
-                             expected=self.expected, oracle=self.oracle,
-                             corrupt=self.args.corrupt)
+                             expected=self.expected, corrupt=self.args.corrupt)
 
     # -- inputs and oracles -------------------------------------------------
 
     def prepare_inputs(self) -> None:
-        """Generate the input and compute its expected outputs (DuckDB)."""
-        import __spark_entry__ as registry
-
-        gen.generate(self.data, self.sizes, self.args.seed)
-        self.oracle = Oracle(self.data, list(self.sizes))
-        sql = registry.oracle_sql()
-        self.expected = {name: self.oracle.query(sql[name]) for name in self.wl.oracles}
+        """Generate the inputs and compute the expected outputs in a child
+        process (``prepare.py``) that has exited before set-up starts."""
+        out = os.path.join(self.scratch, "expected.pkl")
+        subprocess.run([sys.executable, os.path.join(HERE, "prepare.py"), self.args.workload,
+                        str(self.args.seed), str(self.args.scale), self.data, out], check=True)
+        with open(out, "rb") as f:
+            self.expected = pickle.load(f)
 
     # -- set-up ---------------------------------------------------------------
 
     def setup(self, event_log: bool):
         """Start the session and run the warm-up jobs on the measured input.
-
-        ``setup_s`` is the session start plus the warm-up jobs. The input
-        is generated and the oracle runs while the JVM starts; waiting for
-        them, if they take longer, is not part of ``setup_s``."""
+        ``setup_s`` is the session start plus the warm-up jobs."""
         from pac_data_pipeline_spark.session import get_spark
 
-        failure: list[BaseException] = []
-
-        def prepare():
-            try:
-                self.prepare_inputs()
-            except BaseException as exc:  # re-raised on the main thread
-                failure.append(exc)
-
-        background = threading.Thread(target=prepare)
-        background.start()
         t0 = time.perf_counter()
         spark = get_spark(app_name="perfbench", extra_conf=spark_conf(self.scratch, event_log))
         self.setup_session(spark)
         self.start_s = time.perf_counter() - t0
-        background.join()
-        if failure:
-            raise failure[0]
         ctx = self.ctx(spark)
         ctx.corrupt = False  # the self-test corrupts measured jobs only
-        for _ in range(WARMUP_JOBS):
+        for _ in range(self.wl.warmup_jobs):
             self.wl.clear_outputs(ctx)
             t1 = time.perf_counter()
             outs = self.wl.job(ctx, NullTracer())
-            self.warmup_s += time.perf_counter() - t1
+            self.warmup_jobs_s.append(time.perf_counter() - t1)
             errors = self.wl.check(ctx, outs)
             if errors:
                 raise RuntimeError(f"warm-up job failed its check: {errors}")
+        self.warmup_s = sum(self.warmup_jobs_s)
         return spark
 
     # -- measurement ----------------------------------------------------------
@@ -244,6 +232,7 @@ class Run:
 
     def execute(self) -> dict:
         traced = bool(self.args.trace)
+        self.prepare_inputs()
         with RssSampler() as rss:
             spark = self.setup(event_log=traced)
             stream_stats = StreamingStats()
@@ -256,18 +245,10 @@ class Run:
                 self.measure(ctx, NullTracer(), rss, self.args.seconds / 2, "untraced", 1)
                 tracer = Tracer(spark.sparkContext)
                 self.measure(ctx, tracer, rss, self.args.seconds / 2, "traced", 1)
-            spark.sparkContext.setLocalProperty(PHASE_PROPERTY, None)
-            spark.sparkContext.setLocalProperty(JOB_PROPERTY, None)
-            try:
-                self.final_errors = self.wl.final_check(ctx)
-            except Exception:
-                traceback.print_exc()
-                self.final_errors = ["final check raised; traceback on stderr"]
             versions = {"spark": spark.version,
                         "java": spark.sparkContext._jvm.System.getProperty("java.version"),
                         "python": sys.version.split()[0]}
             stop_spark(spark)
-        self.oracle.close()
         result = {"versions": versions}
         if traced:
             import metrics
@@ -284,7 +265,7 @@ class Run:
 def main(argv=None) -> int:
     args = parse_args(argv)
     sys.path[:0] = [ROOT, HERE]
-    arm_deadline()
+    arm_deadline(args.seconds + MARGIN_S)
     import __spark_entry__  # noqa: F401  (the program under test must be present)
     import metrics
     import workloads
@@ -301,15 +282,11 @@ def main(argv=None) -> int:
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
     measured = [j for j in run.jobs if j["phase"] == "untraced" or args.trace]
-    failed = sum(1 for j in measured if j["errors"]) + (
-        len(measured) if run.final_errors else 0)
-    failed = min(failed, len(measured))
-    for e in run.final_errors:
-        print(f"[check] run: {e}", file=sys.stderr)
+    failed = sum(1 for j in measured if j["errors"])
     print(json.dumps({"env": {**env, **result["versions"], "workload": args.workload,
                               "seed": args.seed, "sizes": run.sizes,
                               "job_s": [round(j["s"], 3) for j in run.jobs],
-                              "start_s": run.start_s, "warmup_s": run.warmup_s}}))
+                              "start_s": run.start_s, "warmup_s": run.warmup_jobs_s}}))
     if args.trace:
         values = result["layers"]
     else:

@@ -5,8 +5,9 @@
 For every workload in ``BENCHMARK.json`` it checks that an untraced run
 prints every end-to-end metric and a traced run every per-layer metric,
 each with its declared unit, and that the outputs check as correct; that
-a run whose outputs are corrupted (one row dropped) reports every job as
-failed; and that in a directory holding only ``BENCHMARK.json`` and the
+a run whose outputs are corrupted (one row dropped; in the upload, one
+record sent in place of another, which keeps the count) reports every job
+as failed, the swapped upload record included; and that in a directory holding only ``BENCHMARK.json`` and the
 benchmark's own files, the benchmark exits non-zero without a result.
 Exits non-zero on the first failure.
 """
@@ -61,6 +62,12 @@ def main() -> None:
         expect(proc.returncode == 0 and res is not None and not res["correct"]
                and res["failed"] == res["attempted"] >= 1,
                f"{w} corrupted output is reported as failed", proc)
+        if w == "contrib_upload":
+            caught = ("uploaded records differ from pipe_snowflake_batch (digest) and "
+                      "from the first job's upload")
+            expect(proc.stderr.count(caught) == res["attempted"],
+                   f"{w} a swapped upload record is caught on every job, against the "
+                   "oracle and against the first job", proc)
 
     bare = os.path.join(ROOT, ".perfbench", "bare")
     shutil.rmtree(bare, ignore_errors=True)

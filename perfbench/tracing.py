@@ -94,10 +94,6 @@ def self_times(spans: list[dict]) -> dict[int, float]:
     return own
 
 
-def layer_of(name: str) -> str:
-    return name.split(".", 1)[0]
-
-
 class EventLog:
     """Task metrics from the newest Spark event log in ``log_dir`` (the
     measured session's), each task tagged with the local properties of
