@@ -66,6 +66,9 @@ def pagerank(
     stream the checkpointed edge side in storage order), so the
     float trajectory is bit-identical to the dense form.
     """
+    if n_iter < 1:
+        # zero iterations leave ranks_s unbound (the hits() guard)
+        raise ValueError("n_iter must be >= 1")
     # the edge list feeds every iteration (plus the out-degree agg);
     # without materialization Catalyst INLINES the caller's edge
     # construction into each consumer — the synthetic 5-way-union
@@ -258,7 +261,11 @@ def hits(
         ta = F.broadcast(
             raw_a.agg(F.round(F.sum("__a"), 12).alias("__ta"))
         )
-        auth = raw_a.crossJoin(ta).select(
+        # the total spans every dst (hits_fixture_sql's ta), but
+        # only node-list dsts score and feed the hub phase
+        auth = raw_a.join(
+            nodes.select(F.col(id_col).alias("dst")), "dst", "left_semi"
+        ).crossJoin(ta).select(
             F.col("dst").alias(id_col),
             F.coalesce(
                 F.round(
@@ -283,7 +290,9 @@ def hits(
         th = F.broadcast(
             raw_h.agg(F.round(F.sum("__hh"), 12).alias("__th"))
         )
-        hub = raw_h.crossJoin(th).select(
+        hub = raw_h.join(
+            nodes.select(F.col(id_col).alias("src")), "src", "left_semi"
+        ).crossJoin(th).select(
             F.col("src").alias(id_col),
             F.coalesce(
                 F.round(
@@ -647,6 +656,9 @@ def personalized_pagerank(
     the edge list once before the loop (guide §2.4). Per-edge
     values and aggregate consumption order are unchanged, so the
     float trajectory is bit-identical to the dense form."""
+    if n_iter < 1:
+        # zero iterations leave ranks_s unbound (the hits() guard)
+        raise ValueError("n_iter must be >= 1")
     edges = edges.localCheckpoint()
     is_seed = (F.col(id_col) % seed_mod == 0).cast("int")
     # seeded (id, flag) feeds the seed count and the final densify

@@ -126,7 +126,11 @@ def mmr_select(
     # exact BIGINTs) are expression-identical, so the pick
     # trajectory is bit-identical to the frame-threaded form.
     def _arr(qv: list) -> str:
-        return "array(" + ",".join(f"{int(v)}L" for v in qv) + ")"
+        # a NULL embedding component stays NULL, as in the frame
+        return "array(" + ",".join(
+            "CAST(NULL AS BIGINT)" if v is None else f"{int(v)}L"
+            for v in qv
+        ) + ")"
 
     picks: list[tuple] = []
     sel_qs: list[list] = []

@@ -92,6 +92,9 @@ def textrank_keywords(
     """Top-``top_k`` keywords by integer fixed-point weighted
     PageRank over the co-occurrence graph; ties break on the token.
     Output: (token, score) with score in pico-units."""
+    if n_iter < 1:
+        # zero iterations leave ranks_s unbound (the hits() guard)
+        raise ValueError("n_iter must be >= 1")
     # Iteration frames stay SPARSE (r12, the pagerank lesson —
     # exact here, not merely float-safe, because the chain is
     # integer fixed-point): a token absent from a round's push

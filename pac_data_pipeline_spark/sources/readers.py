@@ -91,8 +91,8 @@ def scan_jdbc(
     return reader.load()
 
 
-def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Events scan with timestamp normalization.
+def normalize_event_ts(events: DataFrame) -> DataFrame:
+    """Normalize the events ``ts`` column to TimestampType.
 
     The synthetic ``events`` table has shipped in two layouts:
     TIMESTAMP(NANOS) (arrives as a raw nanosecond long under
@@ -101,17 +101,23 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     are normalized to session-local TimestampType here — the session
     timezone is pinned to UTC (session.py), so the NTZ cast is
     wall-clock exact — and downstream operators can rely on
-    ``ts.cast("long")`` for epoch-second arithmetic."""
+    ``ts.cast("long")`` for epoch-second arithmetic. Works on batch
+    and streaming frames alike."""
     from pyspark.sql import functions as F
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = scan_parquet(spark, f"{sf_dir}/events.parquet")
-    ts_type = dict(df.dtypes).get("ts")
+    ts_type = dict(events.dtypes).get("ts")
     if ts_type == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type == "timestamp_ntz":
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+        return events.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts_type == "timestamp_ntz":
+        return events.withColumn("ts", F.col("ts").cast("timestamp"))
+    return events
+
+
+def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Events scan with timestamp normalization
+    (:func:`normalize_event_ts`)."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return normalize_event_ts(scan_parquet(spark, f"{sf_dir}/events.parquet"))
 
 
 def load_tables(

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pac_data_pipeline_spark.streaming.windows import events_stream
+from pac_data_pipeline_spark.streaming.windows import _drain, events_stream
 
 
 def run_streaming_interval_join(
@@ -27,17 +27,15 @@ def run_streaming_interval_join(
     sf_dir: str,
     window_minutes: int = 30,
     watermark: str = "1 hour",
-    query_name: str = "stream_interval_join",
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Clicks joined to the same user's purchases from the preceding
     ``window_minutes`` — a watermarked stream-stream inner join.
 
     On bounded input the emitted set is exactly the batch
     time-range join (the oracle), because inner-join results are
-    emitted as soon as both rows are buffered and
-    ``processAllAvailable`` drains everything; the watermark only
-    governs state EVICTION, never correctness of emitted matches."""
+    emitted as soon as both rows are buffered and the drain runs
+    the input to completion; the watermark only governs state
+    EVICTION, never correctness of emitted matches."""
 
     def _side(event_type: str, prefix: str) -> DataFrame:
         raw = events_stream(spark, sf_dir)
@@ -77,30 +75,12 @@ def run_streaming_interval_join(
             "purchase_ts"
         ),
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        query = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(query_name)
+    return _drain(joined, "append", "stream_interval_join")
 
 
 def run_streaming_enrich(
     spark: SparkSession,
     sf_dir: str,
-    query_name: str = "stream_enrich",
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Stream-static enrichment: the event stream joined to the
     customer dimension (static DataFrame) — Spark re-plans the
@@ -124,20 +104,4 @@ def run_streaming_enrich(
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 2).alias("total_value"),
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        query = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(query_name)
+    return _drain(agg, "complete", "stream_enrich")

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from pac_data_pipeline_spark.streaming.windows import events_stream
+from pac_data_pipeline_spark.streaming.windows import _drain, events_stream
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -56,8 +56,6 @@ def run_streaming_dedup(
     spark: SparkSession,
     sf_dir: str,
     keys: tuple[str, ...] = ("user_id", "event_type"),
-    query_name: str = "stream_dedup",
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Streaming exactly-once dedup: ``dropDuplicates`` on the key
     columns keeps one state entry per distinct key, so each key is
@@ -70,23 +68,7 @@ def run_streaming_dedup(
     race-dependent, the key set is not."""
     raw = events_stream(spark, sf_dir)
     deduped = raw.select(*keys).dropDuplicates(list(keys))
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        query = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(query_name)
+    return _drain(deduped, "append", "stream_dedup")
 
 
 def make_sessionizer(gap_minutes: int = 30, emit_open: bool = True):
@@ -182,22 +164,11 @@ def run_streaming_sessions(
     spark: SparkSession,
     sf_dir: str,
     gap_minutes: int = 30,
-    query_name: str = "stream_sessions",
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Drive the stateful sessionizer over the events parquet as a
     stream (single availableNow-style batch in tests; identical
-    semantics on a live source with multiple batches).
-
-    ``state_partitions`` sizes the state-store shuffle. Each state
-    partition pays a fixed per-micro-batch cost (store open/commit +
-    one Arrow/Python round-trip), so it should track key cardinality
-    and throughput, NOT the session-wide shuffle default: this
-    workload has O(100) users, where 32 state partitions measure 4x
-    slower than 8. At production stream volume raise it — the knob
-    is the streaming analogue of ``spark.sql.shuffle.partitions``
-    and is pinned at the FIRST run by the checkpoint."""
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    semantics on a live source with multiple batches). The state
+    store runs on ``windows.STATE_PARTITIONS`` partitions."""
     raw = events_stream(spark, sf_dir)
     events = (
         raw
@@ -214,22 +185,7 @@ def run_streaming_sessions(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    if state_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        query = (
-            sessions.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(query_name)
+    return _drain(sessions, "append", "stream_sessions")
 
 
 def run_streaming_dedup_within_watermark(
@@ -237,8 +193,6 @@ def run_streaming_dedup_within_watermark(
     sf_dir: str,
     keys: tuple[str, ...] = ("user_id", "event_type"),
     watermark: str = "2 hours",
-    query_name: str = "stream_dedup_wm",
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Bounded-state streaming dedup: ``dropDuplicatesWithinWatermark``
     ages each key out of the state store once the watermark passes it
@@ -256,23 +210,7 @@ def run_streaming_dedup_within_watermark(
         .dropDuplicatesWithinWatermark(list(keys))
         .select(*keys)
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        query = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(query_name)
+    return _drain(deduped, "append", "stream_dedup_wm")
 
 
 #: Streaming EWMA schemas — state carries only the last smoothed
@@ -346,14 +284,11 @@ def run_streaming_ewma(
     spark: SparkSession,
     sf_dir: str,
     alpha: float = 0.3,
-    query_name: str = "stream_ewma",
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Drive the stateful smoother over the events parquet as a
     stream. NULL keys drop before grouping (same contract as the
     batch operator — and a NULL key group would violate the state
     schema); NULL values/timestamps drop inside the fold."""
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
     raw = events_stream(spark, sf_dir)
     events = raw.filter(
         F.col("user_id").isNotNull() & F.col("ts").isNotNull()
@@ -365,19 +300,4 @@ def run_streaming_ewma(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    if state_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        query = (
-            smoothed.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(query_name)
+    return _drain(smoothed, "append", "stream_ewma")

@@ -11,18 +11,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pac_data_pipeline_spark.sources.readers import load_events
+from pac_data_pipeline_spark.sources.readers import normalize_event_ts
 
 #: sf_dir → probed events schema (the layout is fixed per dir; the
 #: probe is an extra driver-side footer read per streaming query
 #: otherwise).
 _EVENTS_SCHEMA_CACHE: dict = {}
 
+#: Shuffle partitions of every memory-sink drain below. Each state
+#: partition pays a fixed per-micro-batch cost (store open/commit +
+#: one Arrow/Python round-trip for the pandas state functions), so
+#: the count tracks key cardinality and throughput, NOT the
+#: session-wide batch default: the events corpus has O(100) users,
+#: where 32 state partitions measure 4x slower than 8 on the
+#: sessionizer. At production stream volume raise it — it is the
+#: streaming analogue of the batch shuffle-partition count and is
+#: pinned at a query's FIRST run by the checkpoint.
+STATE_PARTITIONS = 8
+
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source ``readStream`` over the events parquet with the
     same timestamp normalization as the batch loader
-    (readers.load_events). The file source requires an explicit
+    (readers.normalize_event_ts). The file source requires an explicit
     schema, taken from a static probe scan (cached per directory) so
     both historical testdata layouts (TIMESTAMP(NANOS)-as-long and
     TIMESTAMP(MICROS) NTZ) stream identically as TimestampType
@@ -32,17 +43,40 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     if schema is None:
         schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
         _EVENTS_SCHEMA_CACHE[sf_dir] = schema
-    raw = (
+    return normalize_event_ts(
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    ts_type = dict(raw.dtypes).get("ts")
-    if ts_type == "bigint":
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type == "timestamp_ntz":
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+
+
+def _drain(df: DataFrame, output_mode: str, name: str) -> DataFrame:
+    """Run a streaming frame to completion (availableNow semantics)
+    into the memory sink ``name`` on :data:`STATE_PARTITIONS`
+    shuffle partitions and return the sink table. The query is
+    stopped and the session's shuffle-partition setting restored
+    even when the drain fails.
+
+    In production the source is Kafka and the sink is a parquet/
+    Delta writeStream with checkpointing; the transformation is
+    unchanged."""
+    spark = df.sparkSession
+    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
+    try:
+        query = (
+            df.writeStream.outputMode(output_mode)
+            .format("memory")
+            .queryName(name)
+            .start()
+        )
+        try:
+            query.processAllAvailable()
+        finally:
+            query.stop()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    return spark.table(name)
 
 
 def tumbling_window_agg(events: DataFrame, width: str = "1 hour") -> DataFrame:
@@ -164,55 +198,14 @@ def run_streaming_tumbling(
     sf_dir: str,
     width: str = "1 hour",
     watermark: str = "2 hours",
-    query_name: str = "stream_tumbling",
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Structured Streaming variant of :func:`tumbling_window_agg`:
-    file-source readStream over the events parquet, event-time
-    watermark bounding state, complete-mode memory sink, driven to
-    completion with processAllAvailable (availableNow semantics for
-    tests). Returns the sink table.
-
-    In production the source is Kafka and the sink is a parquet/
-    Delta writeStream with checkpointing; the transformation is
-    byte-identical."""
-    events = events_stream(spark, sf_dir)
-    agg = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(
-            F.date_format("window.start", "yyyy-MM-dd'T'HH:mm:ss").alias(
-                "window_start"
-            ),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
+    the same aggregation over the watermarked events stream,
+    complete-mode memory sink. Returns the sink table."""
+    events = events_stream(spark, sf_dir).withWatermark("ts", watermark)
+    return _drain(
+        tumbling_window_agg(events, width), "complete", "stream_tumbling"
     )
-    # state partitions track aggregate-key cardinality (windows ×
-    # types here), not the batch shuffle default — see
-    # stateful.run_streaming_sessions for the measured rationale.
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        query = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(query_name)
 
 
 def run_streaming_sliding(
@@ -221,8 +214,6 @@ def run_streaming_sliding(
     width: str = "1 hour",
     slide: str = "15 minutes",
     watermark: str = "2 hours",
-    query_name: str = "stream_sliding",
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Structured Streaming variant of :func:`sliding_window_agg`:
     each event lands in width/slide overlapping window instances
@@ -230,41 +221,7 @@ def run_streaming_sliding(
     watermark is what keeps that bounded). Complete-mode memory sink
     driven to completion, so on bounded input the result equals the
     batch sliding aggregation and shares its oracle."""
-    events = events_stream(spark, sf_dir)
-    agg = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width, slide))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(
-            F.date_format("window.start", "yyyy-MM-dd'T'HH:mm:ss").alias(
-                "window_start"
-            ),
-            "n_events",
-            "total_value",
-        )
+    events = events_stream(spark, sf_dir).withWatermark("ts", watermark)
+    return _drain(
+        sliding_window_agg(events, width, slide), "complete", "stream_sliding"
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        query = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(query_name)
-
-
-def load_events_for_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared batch loader (nanos-normalized timestamps)."""
-    return load_events(spark, sf_dir)

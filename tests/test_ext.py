@@ -527,9 +527,7 @@ def test_streaming_matches_batch(spark, tmp_path):
 
     sf_dir = "/root/testdata/sf0.001"
     try:
-        stream = run_streaming_tumbling(
-            spark, sf_dir, query_name="t_stream_batch_parity"
-        ).collect()
+        stream = run_streaming_tumbling(spark, sf_dir).collect()
     except Exception as exc:  # pragma: no cover
         pytest.skip(f"streaming unavailable: {exc}")
     batch = tumbling_window_agg(load_events(spark, sf_dir)).collect()
@@ -547,9 +545,7 @@ def test_streaming_sliding_matches_batch(spark):
 
     sf_dir = "/root/testdata/sf0.001"
     try:
-        stream = run_streaming_sliding(
-            spark, sf_dir, query_name="t_slide_parity"
-        ).collect()
+        stream = run_streaming_sliding(spark, sf_dir).collect()
     except Exception as exc:  # pragma: no cover
         pytest.skip(f"streaming unavailable: {exc}")
     batch = sliding_window_agg(load_events(spark, sf_dir)).collect()
@@ -2370,6 +2366,25 @@ def test_mmr_select_matches_greedy_reference(spark):
     assert sorted(r.sel_rank for r in picks) == [1, 2, 3]
 
 
+def test_mmr_select_tolerates_null_vector_component(spark):
+    """A selected embedding with a NULL component folds into the next
+    round's expression as a NULL literal instead of failing the
+    build; with k > n every vector is still picked exactly once."""
+    from pac_data_pipeline_spark.ext.mmr import mmr_select
+
+    rows = [
+        (0, [0.1, 0.2]),
+        (1, [None, 0.3]),
+        (2, [0.5, -0.1]),
+        (3, [0.0, 0.0]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    picks = mmr_select(df, k=5).orderBy("sel_rank").collect()
+    assert [r.sel_rank for r in picks] == [1, 2, 3, 4]
+    assert sorted(r.vid for r in picks) == [0, 1, 2, 3]
+    assert [r.rel_d for r in picks if r.vid == 1] == [None]
+
+
 def test_temperature_mixture_hamilton_exact(spark):
     """Mixture contract: allocations sum to EXACTLY the budget
     (Hamilton's method — float-share rounding can be off by
@@ -3111,6 +3126,56 @@ def test_hits_hand_computed(spark):
     none = spark.createDataFrame([], "src long, dst long")
     zeros = {r.doc_id: (r.hub, r.auth) for r in hits(nodes, none).collect()}
     assert all(v == (0.0, 0.0) for v in zeros.values())
+
+
+def test_hits_ignores_edges_leaving_the_node_list(spark):
+    """Edge endpoints outside ``nodes`` feed the L1 totals but never
+    score: node ids {0..7} minus 3 with N=7 make the functional
+    graph's edge (2, 3) point outside the node list — the one
+    dangling edge. hits() must match hits_fixture_sql on DuckDB,
+    which restricts every phase to the node list."""
+    import duckdb
+    import pandas as pd
+
+    from pac_data_pipeline_spark.ext.graph import (
+        functional_edges,
+        hits,
+        hits_fixture_sql,
+    )
+
+    ids = [0, 1, 2, 4, 5, 6, 7]
+    nodes = spark.createDataFrame([(i,) for i in ids], "doc_id long")
+    edges = functional_edges(nodes)
+    assert [tuple(r) for r in edges.filter("dst = 3").collect()] == [(2, 3)]
+    got = {r.doc_id: (r.hub, r.auth) for r in hits(nodes, edges).collect()}
+
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame({"doc_id": ids}))
+    want = {
+        i: (h, a) for i, h, a in con.execute(hits_fixture_sql()).fetchall()
+    }
+    assert got == want
+
+
+@pytest.mark.parametrize(
+    "fn", ["pagerank", "personalized_pagerank", "textrank_keywords"]
+)
+def test_rank_iterations_reject_zero(spark, fn):
+    """The unrolled rank loops need at least one iteration; n_iter=0
+    raises ValueError up front (the hits() guard) instead of failing
+    on an unbound rank frame."""
+    from pac_data_pipeline_spark.ext import graph, textrank
+
+    if fn == "textrank_keywords":
+        df = spark.createDataFrame([("alpha beta gamma",)], "text string")
+        args = (df,)
+    else:
+        nodes = spark.createDataFrame([(0,), (1,)], "doc_id long")
+        edges = spark.createDataFrame([(0, 1)], "src long, dst long")
+        args = (nodes, edges)
+    build = getattr(textrank if fn == "textrank_keywords" else graph, fn)
+    with pytest.raises(ValueError, match="n_iter"):
+        build(*args, n_iter=0)
 
 
 def test_hits_rejects_zero_iterations(spark):

@@ -5,6 +5,7 @@ the path a single-batch oracle run never exercises."""
 from __future__ import annotations
 
 import pandas as pd
+from pyspark.sql import functions as F
 
 from pac_data_pipeline_spark.streaming.stateful import make_sessionizer
 
@@ -218,9 +219,7 @@ def test_streaming_ewma_equals_batch_fold(spark):
     sf = "/root/testdata/sf0.001"
     got = {
         (r.user_id, r.event_id): (r.value, r.ewma)
-        for r in run_streaming_ewma(
-            spark, sf, query_name="stream_ewma_t"
-        ).collect()
+        for r in run_streaming_ewma(spark, sf).collect()
     }
     exp = {
         (r.user_id, r.event_id): (r.value, r.ewma)
@@ -229,3 +228,49 @@ def test_streaming_ewma_equals_batch_fold(spark):
         ).collect()
     }
     assert got == exp and len(got) > 0
+
+
+def _file_stream(spark, tmp_path, n):
+    src = str(tmp_path / "src")
+    spark.range(n).write.parquet(src)
+    return spark.readStream.schema("id long").parquet(src)
+
+
+def test_drain_restores_conf_and_stops_query(spark, tmp_path):
+    """The shared memory-sink drain runs on STATE_PARTITIONS, then
+    hands back the session's own shuffle-partition setting, leaves no
+    active query behind and returns the drained table."""
+    from pac_data_pipeline_spark.streaming.windows import (
+        STATE_PARTITIONS,
+        _drain,
+    )
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    assert before != str(STATE_PARTITIONS)
+    agg = _file_stream(spark, tmp_path, 20).groupBy(
+        (F.col("id") % 3).alias("k")
+    ).count()
+    out = _drain(agg, "complete", "drain_ok")
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert spark.streams.active == []
+    assert sorted(map(tuple, out.collect())) == [(0, 7), (1, 7), (2, 6)]
+
+
+def test_drain_cleans_up_when_the_query_fails(spark, tmp_path):
+    """A query that raises mid-drain propagates its error, and the
+    drain still stops the query and restores the conf."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    from pac_data_pipeline_spark.streaming.windows import _drain
+
+    @F.udf("long")
+    def boom(x):
+        raise ValueError("drain-boom")
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    failing = _file_stream(spark, tmp_path, 5).select(boom("id").alias("id"))
+    with pytest.raises(StreamingQueryException, match="drain-boom"):
+        _drain(failing, "append", "drain_fail")
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert spark.streams.active == []
